@@ -2,7 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare
+  * (`tools/oracle_check.py`). Exits 1 when any query failed — after
+  * still writing every other result and oracle_sql.json, so one failure
+  * does not hide the rest. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -31,6 +34,7 @@ object Verify {
     // Queries are independent; run a few concurrently so the driver's
     // per-round verify doesn't serialize 40+ small Spark jobs (Spark's
     // scheduler interleaves them). Failures stay isolated per query.
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
@@ -42,6 +46,7 @@ object Verify {
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          failed.add(name)
         }
       }
     }
@@ -77,5 +82,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (!failed.isEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: " +
+        failed.toArray(Array.empty[String]).sorted.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

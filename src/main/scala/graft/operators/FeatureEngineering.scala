@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Geo
+import graft.schema.Schemas
 
 /** STEP 4: silver → gold feature table, one declarative plan.
   *
@@ -17,10 +18,16 @@ import graft.functions.Geo
   * Scale design:
   *  - zone join: 7-polygon broadcast nested-loop left join — no fact shuffle;
   *  - all window functions share ONE partitioning
-  *    `(device_id, device_date) ORDER BY timestamp`, so the stack costs a
-  *    single hash shuffle; the per-device stddev (different key) is computed
-  *    as a groupBy + broadcast join-back rather than a second full-table
-  *    window shuffle;
+  *    `Schemas.deviceDayKeys ORDER BY timestamp`
+  *    (`(device_date, device_id)`), so the stack costs a single hash
+  *    shuffle and a single sort, evaluated in two Window passes (frames
+  *    over silver columns, then frames over those outputs); the
+  *    per-device stddev (different key) is computed as a groupBy +
+  *    broadcast join-back rather than a second full-table window shuffle;
+  *  - the gold export (`ExportSink.goldParquet`/`goldOrc`) clusters on the
+  *    same keys plus `timestamp`, so on this stage's output the planner
+  *    drops the export's exchange and sort: silver → gold file is one
+  *    fact-table shuffle end to end;
   *  - everything is built-in expressions → whole-stage codegen end-to-end.
   */
 object FeatureEngineering {
@@ -86,72 +93,73 @@ object FeatureEngineering {
 
   /** The full window stack + assembly (`04_worker_script.sql:18-68` +
     * `04_final_assembly.sql:5-26`). Expects silver columns + location join
-    * already applied; see [[features]] for the composed stage. */
+    * already applied; see [[features]] for the composed stage.
+    *
+    * Two `select`s, so two Window operators over one sort: the first
+    * computes every frame whose input is a silver column, the second
+    * every frame over the first's outputs. Each Window operator buffers
+    * whole device-days, so the pass count, not the frame count, sets the
+    * stage's buffering cost. */
   def withWindowFeatures(df: DataFrame): DataFrame = {
-    val w = Window.partitionBy("device_id", "device_date").orderBy("timestamp")
+    val w = Window.partitionBy(Schemas.deviceDayKeys.map(col): _*)
+      .orderBy("timestamp")
     val c5 = w.rowsBetween(-2, 2)
     val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val altitude = col("current_position.alt")
+    val isStationary = col("current_speed") < 0.5
+    val tsUs = unix_micros(col("timestamp"))
 
-    val base = df
-      .withColumn("altitude", col("current_position.alt"))
-      .withColumn("is_stationary", col("current_speed") < 0.5)
-    // LAG(is_stationary, 1, is_stationary): default = current row's value
-    val basic = base
-      .withColumn("prev_stationary",
-        coalesce(lag("is_stationary", 1).over(w), col("is_stationary")))
+    val pass1 = df.select(col("*"),
+      altitude.as("altitude"),
+      isStationary.as("is_stationary"),
+      // LAG(is_stationary, 1, is_stationary): default = current row's value
+      coalesce(lag(isStationary, 1).over(w), isStationary)
+        .as("prev_stationary"),
       // exact integer microseconds; the seconds view divides ONCE so the
       // value is bit-reproducible across engines/platforms (no float
       // accumulation) — at 100 TB run-to-run determinism is a feature
-      .withColumn("time_delta_us", coalesce(
-        unix_micros(col("timestamp")) -
-          lag(unix_micros(col("timestamp")), 1).over(w), lit(0L)))
-      .withColumn("time_delta", col("time_delta_us") / 1e6)
-      .withColumn("load_weight_smoothed", avg("load_weight").over(c5))
-    val blocks = basic
-      .withColumn("stationary_block_id",
-        sum(when(col("is_stationary") =!= col("prev_stationary"), 1)
-          .otherwise(0)).over(run))
-    // Per-block running dwell WITHOUT the block-partitioned window
-    // (guide §2.2: one partitioning/order serving every frame). The
-    // naive frame — partitionBy(device, date, block) running sum —
-    // needs its own sort order, which cost the stage two extra
-    // full-table sorts (re-sort into block order + restore sort for
-    // any later (device, date, ts) window; measured as Sort nodes
-    // (15)/(18) in plans/r17/q_feature_stack_after.txt). Because
-    // blocks are CONTIGUOUS runs in (device, date, ts) order and
-    // time_delta_us ≥ 0 after the sort, the block-scoped running sum
-    // equals cum − base over the device-date partition, where
-    //   cum  = running Σ time_delta_us   (same order as every w frame)
-    //   base = running MAX over block-start markers (cum − delta at
-    //          each block boundary; cum is non-decreasing, so the max
-    //          IS the latest block start's baseline; first block has
-    //          no marker → 0)
-    // Exact-integer equality, not an approximation: all terms are
-    // longs, so cum − base is bit-identical to the per-block sum the
-    // old frame computed (the division by 1e6 happens once, after).
-    blocks
-      .withColumn("_cum_us", sum("time_delta_us").over(run))
-      .withColumn("_block_base_us", coalesce(
-        max(when(col("is_stationary") =!= col("prev_stationary"),
-          col("_cum_us") - col("time_delta_us"))).over(run),
-        lit(0L)))
-      .withColumn("altitude_rate_of_change",
-        col("altitude") - lag("altitude", 1).over(w))
+      coalesce(tsUs - lag(tsUs, 1).over(w), lit(0L)).as("time_delta_us"),
+      avg("load_weight").over(c5).as("load_weight_smoothed"),
+      // running Σ time_delta_us, telescoped: every delta is the gap to
+      // the previous row (0 for the first row and for null timestamps,
+      // which sort first), so the sum is exactly the distance from the
+      // first non-null timestamp — an integer identity, no accumulation
+      coalesce(tsUs - first(tsUs, ignoreNulls = true).over(run), lit(0L))
+        .as("_cum_us"),
+      (altitude - lag(altitude, 1).over(w)).as("altitude_rate_of_change"),
       // "5s" in the reference name, but the frame is 5 ROWS at ~2 Hz —
       // keep rows semantics (SURVEY §7.4).
-      .withColumn("speed_rolling_avg_5s", avg("current_speed").over(c5))
-      .withColumn("load_weight_rate_of_change",
-        col("load_weight_smoothed") -
-          lag("load_weight_smoothed", 1).over(w))
+      avg("current_speed").over(c5).as("speed_rolling_avg_5s"))
+
+    val blockStart = col("is_stationary") =!= col("prev_stationary")
+    // Per-block running dwell WITHOUT a block-partitioned window (guide
+    // §2.2: one partitioning/order serving every frame — a
+    // partitionBy(device, date, block) frame needs its own sort order,
+    // two extra full-table sorts). Blocks are CONTIGUOUS runs in
+    // (device, date, ts) order and _cum_us is non-decreasing, so the
+    // block-scoped running sum is _cum_us − base, where base is the
+    // running MAX of the block-start baselines (_cum_us − delta at each
+    // block boundary; the first block has none → 0). All terms are
+    // longs: bit-identical to the per-block sum, divided by 1e6 once.
+    val blockBaseUs = coalesce(
+      max(when(blockStart, col("_cum_us") - col("time_delta_us"))).over(run),
+      lit(0L))
+    pass1.select(df.columns.map(c => col(s"`$c`")).toIndexedSeq ++ Seq(
+      col("altitude"),
+      col("is_stationary"),
+      (col("time_delta_us") / 1e6).as("time_delta"),
+      col("load_weight_smoothed"),
+      sum(when(blockStart, 1).otherwise(0)).over(run)
+        .as("stationary_block_id"),
+      col("altitude_rate_of_change"),
+      col("speed_rolling_avg_5s"),
+      (col("load_weight_smoothed") - lag("load_weight_smoothed", 1).over(w))
+        .as("load_weight_rate_of_change"),
       // running dwell accumulated in exact integer µs, divided once —
       // identical semantics to SUM(time_delta) (04_worker_script.sql:63-66)
       // up to float association, but engine-deterministic
-      .withColumn("time_in_stationary_state",
-        when(col("is_stationary"),
-          (col("_cum_us") - col("_block_base_us")) / 1e6)
-          .otherwise(0.0))
-      .drop("prev_stationary", "time_delta_us", "_cum_us",
-        "_block_base_us")
+      when(col("is_stationary"), (col("_cum_us") - blockBaseUs) / 1e6)
+        .otherwise(0.0).as("time_in_stationary_state")): _*)
   }
 
   /** Per-device payload-sensor reliability: STDDEV(load_weight) over the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.operators.{FeatureEngineering, TelemetryTransform}
+import graft.schema.Schemas
 
 /** The reference pipeline stages (STEP 2 transform, STEP 4 features,
   * spatial zone join) exercised through the DuckDB-oracle gate.
@@ -182,7 +183,7 @@ object PipelineQueries {
       // reliability broadcast join so Catalyst merges them into the
       // operator's existing window chain (no extra sort).
       val wq = org.apache.spark.sql.expressions.Window
-        .partitionBy("device_id", "device_date").orderBy("timestamp")
+        .partitionBy(Schemas.deviceDayKeys.map(col): _*).orderBy("timestamp")
         .rowsBetween(-2, 2)
       val windowed = FeatureEngineering.withWindowFeatures(silver)
         .withColumn("speed_q", floor(col("current_speed") * 1e6).cast("long"))

@@ -53,6 +53,14 @@ object Schemas {
     StructField("prndl", StringType),
     StructField("extras", StringType)))
 
+  /** The device-day clustering shared by the silver → gold path: the
+    * window stack partitions by these keys, and the gold export clusters
+    * on them (plus `timestamp`) so its exchange and sort are satisfied by
+    * the window's own. The partition column comes first; one device per
+    * `device_date` (as `TelemetryTransform` builds it) means one writer
+    * per partition directory. */
+  val deviceDayKeys: Seq[String] = Seq("device_date", "device_id")
+
   /** Candidate events (`05_load_candidates_to_db.py:96-98`), with the richer
     * archived columns kept optional (`_archive/05_cpd_pipeline.sql:8-18`). */
   val candidateEvents: StructType = StructType(Seq(

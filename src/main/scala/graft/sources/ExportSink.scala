@@ -3,7 +3,9 @@ package graft.sources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** STEP 5 export + load-validation surfaces (S5, S8, S9).
+import graft.schema.Schemas
+
+/** STEP 5 export + load-validation surfaces (S5, S9).
   */
 object ExportSink {
 
@@ -11,13 +13,17 @@ object ExportSink {
     * time-ordered within each partition, snappy — the reference's
     * `COPY → pandas → Arrow → write_to_dataset` pipeline
     * (`05_export_features_to_parquet.py:186-313`) as one write. The
-    * reference's global `ORDER BY device_date, timestamp` is relaxed to
-    * repartition-by-partition-column + sortWithinPartitions: identical
-    * file layout, no global sort (SURVEY §2.6 O2).
+    * reference's global `ORDER BY device_date, timestamp` is relaxed to a
+    * repartition on [[Schemas.deviceDayKeys]] + sortWithinPartitions on
+    * those keys and `timestamp` (SURVEY §2.6 O2): the clustering the
+    * feature window stack already produced, so on its output the planner
+    * removes both the exchange and the sort. Any other input is clustered
+    * into the same layout. With one device per `device_date` (as
+    * `TelemetryTransform` builds it) each partition directory gets
+    * exactly one time-ordered file.
     */
   def goldParquet(df: DataFrame, outDir: String): Unit =
-    df.repartition(col("device_date"))
-      .sortWithinPartitions("device_date", "timestamp")
+    deviceDayClustered(df)
       .write.mode("overwrite")
       .partitionBy("device_date")
       .option("compression", "snappy")
@@ -27,17 +33,16 @@ object ExportSink {
     * ordering contract in the other columnar format Spark ships
     * natively — for consumers standardized on ORC warehouses. */
   def goldOrc(df: DataFrame, outDir: String): Unit =
-    df.repartition(col("device_date"))
-      .sortWithinPartitions("device_date", "timestamp")
+    deviceDayClustered(df)
       .write.mode("overwrite")
       .partitionBy("device_date")
       .option("compression", "zlib")
       .orc(outDir)
 
-  /** Candidate CSV sink (S8): header'd CSV like the orchestrator's final
-    * output (`05_cpd_orchestrator_polars.py:605-612`). */
-  def candidatesCsv(df: DataFrame, outDir: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(outDir)
+  private def deviceDayClustered(df: DataFrame): DataFrame =
+    df.repartition(Schemas.deviceDayKeys.map(col): _*)
+      .sortWithinPartitions(
+        (Schemas.deviceDayKeys :+ "timestamp").map(col): _*)
 
   /** Post-load invariant checks (S9/§5.2): rowcount vs distinct PK, null
     * criticals, device/time sanity — the loader's validation block

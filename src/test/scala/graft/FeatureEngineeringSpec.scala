@@ -3,7 +3,15 @@ package graft
 import java.sql.Timestamp
 
 import graft.operators.FeatureEngineering
+import graft.sources.ExportSink
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, BroadcastQueryStageExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden-value pin for the window-feature stack — specifically the
@@ -98,5 +106,83 @@ class FeatureEngineeringSpec extends AnyFunSuite {
     val nExchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
     assert(nExchanges == 1, s"window stack exchanges: $nExchanges\n$plan")
     assert(nSorts == 1, s"window stack sorts: $nSorts\n$plan")
+  }
+
+  /** Every node of a physical plan, through adaptive stages, minus the
+    * broadcast sides: what runs over the fact rows. */
+  private def factPath(p: SparkPlan): Seq[SparkPlan] = p match {
+    case _: BroadcastExchangeLike | _: BroadcastQueryStageExec => Nil
+    case a: AdaptiveSparkPlanExec => factPath(a.executedPlan)
+    case q: QueryStageExec => factPath(q.plan)
+    case other => other +: other.children.flatMap(factPath)
+  }
+
+  /** The executed plan of the one file write `body` runs (listener
+    * events of earlier queries may still arrive: only a write counts). */
+  private def writePlan(body: => Unit): SparkPlan = {
+    val seen = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (factPath(qe.executedPlan)
+            .exists(_.isInstanceOf[DataWritingCommandExec]))
+          seen.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val plan = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(plan != null, "no write plan reported")
+      plan
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private def pinRows(devices: Int, n: Int) = for {
+    d <- 0 until devices; i <- 0 until n
+  } yield silverRow(s"dev$d", i.toLong, if (i % 4 < 2) 0.1 else 5.0)
+
+  test("the window stack runs in at most two Window operators") {
+    val plan = FeatureEngineering.withWindowFeatures(silverDf(pinRows(2, 16)))
+      .queryExecution.executedPlan
+    val windows = factPath(plan).collect { case w: WindowExec => w }
+    assert(windows.size <= 2, s"window operators: ${windows.size}\n$plan")
+  }
+
+  test("features → goldParquet plans one fact exchange and one sort: the " +
+      "export reuses the window stack's device-day clustering") {
+    val silver = silverDf(pinRows(3, 16)).withColumn("prndl", lit("drive"))
+    val gold = FeatureEngineering.features(silver,
+      FeatureEngineering.zonesDf(spark))
+    val dir = java.nio.file.Files.createTempDirectory("gold-plan").toString
+    val plan = writePlan(ExportSink.goldParquet(gold, dir))
+    val nodes = factPath(plan)
+    val shuffles = nodes.collect { case e: ShuffleExchangeExec => e }
+    val sorts = nodes.collect { case s: SortExec => s }
+    assert(shuffles.size == 1, s"fact-path exchanges\n$plan")
+    assert(shuffles.head.outputPartitioning.asInstanceOf[HashPartitioning]
+      .expressions.map(_.sql) == Seq("device_date", "device_id"),
+      s"fact-path exchange keys\n$plan")
+    assert(sorts.size == 1, s"fact-path sorts\n$plan")
+    assert(spark.read.parquet(dir).count() == 48)
+  }
+
+  test("goldParquet clusters an unclustered frame into one time-ordered " +
+      "file per device_date") {
+    // shuffled rows over several input partitions: nothing upstream
+    // provides the layout, so the export's own exchange and sort must
+    val rows = scala.util.Random.shuffle(pinRows(5, 40).toList)
+    val df = silverDf(rows).repartition(3)
+    val dir = java.nio.file.Files.createTempDirectory("gold-layout").toFile
+    ExportSink.goldParquet(df, dir.toString)
+    val partDirs = dir.listFiles().filter(_.getName.startsWith("device_date="))
+    assert(partDirs.length == 5)
+    partDirs.foreach { pd =>
+      val files = pd.listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, s"${pd.getName}: ${files.map(_.getName).toSeq}")
+      val ts = spark.read.parquet(files.head.toString)
+        .select("timestamp").collect().map(_.getTimestamp(0).getTime).toSeq
+      assert(ts.size == 40 && ts == ts.sorted, pd.getName)
+    }
   }
 }
